@@ -43,12 +43,13 @@ def main() -> int:
     from kgforge.extract import extract_text_udf
     from kgforge.mentions import detect_mentions
     from kgforge.operators import graph as G
-    from kgforge.pipeline import _linker_aliases, kg_fused, pages_with_links
+    from kgforge.ontology import prepare_dictionary
+    from kgforge.pipeline import inline_dictionary, kg_fused, pages_with_links
 
     spark = get_spark("kgforge-fused", cpus=args.cpus,
                       shuffle_partitions=args.cpus)
     sf = args.sf_dir
-    aliases = _linker_aliases(spark)
+    _dic, aliases = prepare_dictionary(inline_dictionary(spark))
 
     def sep_gates():
         pages = pages_with_links(spark, sf)

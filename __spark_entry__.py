@@ -77,3 +77,21 @@ def oracle_sql() -> dict[str, str]:
     out.update(temporal.ORACLES)
     out.update(streaming.ORACLES)
     return out
+
+
+def all_queries() -> tuple[dict[str, Callable], dict[str, str]]:
+    """queries() plus every standalone query the compound bundles fold
+    away (relational/textstats/dedup/similarity/pipeline QUERIES), and
+    oracle_sql() plus their oracles: what bench.py and bench_extra.py
+    time and `tools/verify_local.py --all-rel` checks. The registry
+    entry wins where both carry a name."""
+    from kgforge import pipeline
+    from kgforge.operators import dedup, relational, similarity, textstats
+
+    qs, oracles = queries(), oracle_sql()
+    for mod in (relational, textstats, dedup, similarity, pipeline):
+        for name, fn in mod.QUERIES.items():
+            qs.setdefault(name, fn)
+        for name, sql in mod.ORACLES.items():
+            oracles.setdefault(name, sql)
+    return qs, oracles

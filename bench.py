@@ -134,23 +134,14 @@ def materialize(df) -> int:
 def main() -> int:
     import __spark_entry__ as se
     from kgforge.conf import get_spark
+    from kgforge.pipeline import reset_stages
 
     load_at_measure = _wait_for_quiet()
     spark = get_spark("kgforge-bench", cpus=CPUS, shuffle_partitions=CPUS)
     # the driver registry is consolidated to ~48 names (compound
     # bundles); the bench headline keeps the r01/r02 standalone queries
-    # for round-over-round comparability, so fall back to the full
-    # relational inventory for names the registry no longer carries
-    from kgforge.operators import dedup, relational, similarity, textstats
-
-    from kgforge import pipeline
-
-    qs = dict(relational.QUERIES)
-    qs.update(textstats.QUERIES)  # tx_* standalones melt into tx_stats
-    qs.update(dedup.QUERIES)  # dd_exact/passage/url/bloom melt into dd_stats
-    qs.update(pipeline.QUERIES)  # kg_hearst/kg_diff melt into kg_meta
-    qs.update(similarity.QUERIES)  # sim_topk_pq is bench/pytest-only
-    qs.update(se.queries())
+    # for round-over-round comparability, which all_queries() carries
+    qs = se.all_queries()[0]
     timings: dict[str, float] = {}
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
 
@@ -182,17 +173,6 @@ def main() -> int:
     # other query (they were single-sample pass-1 numbers before).
     # Guarded: skip the repeat if the first pass already spent the
     # budget.
-    def reset_kg_cache() -> None:
-        from kgforge import pipeline as P
-
-        for stages in P._KG_STAGE_CACHE.values():
-            for df in stages.values():
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        P._KG_STAGE_CACHE.clear()
-
     # 4 passes by default (r03 VERDICT: best-of-2 wasn't enough to dodge
     # the box's noise windows); two budget guards keep the worst case
     # bounded — stop if a single pass blows 100s or the suite has already
@@ -202,7 +182,7 @@ def main() -> int:
     passes: list[dict[str, float]] = []
     bench_t0 = time.time()
     for it in range(max(1, repeats)):
-        reset_kg_cache()
+        reset_stages()
         cur: dict[str, float] = {}
         for name in HEADLINE:
             fn = qs[name]

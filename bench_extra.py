@@ -45,16 +45,10 @@ def main() -> int:
 
     import __spark_entry__ as se
     from kgforge.conf import get_spark
-    from kgforge import pipeline
-    from kgforge.operators import dedup, relational, similarity, textstats
+    from kgforge.pipeline import reset_stages
 
     spark = get_spark("kgforge-bench-extra", cpus=args.cpus, shuffle_partitions=args.cpus)
-    qs = dict(relational.QUERIES)
-    qs.update(textstats.QUERIES)
-    qs.update(dedup.QUERIES)
-    qs.update(pipeline.QUERIES)
-    qs.update(similarity.QUERIES)
-    qs.update(se.queries())
+    qs = se.all_queries()[0]
 
     # same warm protocol as bench.py: one scan query + one pandas-UDF job
     qs["rel_filtered_scan"](spark, args.sf).write.mode("overwrite").format("noop").save()
@@ -70,15 +64,6 @@ def main() -> int:
         F.sum(_warm("id"))
     ).collect()
 
-    def reset_kg_cache() -> None:
-        for stages in pipeline._KG_STAGE_CACHE.values():
-            for df in stages.values():
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        pipeline._KG_STAGE_CACHE.clear()
-
     timings: dict[str, float] = {}
     if args.explain:
         for name in args.names:
@@ -89,13 +74,13 @@ def main() -> int:
             out = Path(args.explain)
             out.mkdir(parents=True, exist_ok=True)
             (out / f"{name}_{args.suffix}.txt").write_text(buf.getvalue())
-            reset_kg_cache()
+            reset_stages()
     if not args.no_time:
         # bench.py's protocol: the kg_* stage cache is cleared once per
         # PASS (queries within a pass share stages, in list order), and
         # per-query timings take best-of-k across passes
         for _ in range(max(1, args.repeats)):
-            reset_kg_cache()
+            reset_stages()
             for name in args.names:
                 fn = qs[name]
                 spark.sparkContext.setJobDescription(f"bench_extra: {name}")

@@ -142,10 +142,15 @@ def _footer_row_count(path: str) -> int:
 
 
 def fingerprint_input(path: str) -> str:
-    """Cheap input fingerprint: parquet file names + sizes + mtimes.
-    (Iceberg snapshot id on a real deployment.)"""
+    """Cheap input fingerprint: parquet file names + sizes + mtimes, of a
+    parquet directory or a single parquet file. (Iceberg snapshot id on
+    a real deployment.)"""
     parts = []
-    for root, _dirs, files in os.walk(path):
+    if os.path.isfile(path):
+        walk = [(os.path.dirname(path), [], [os.path.basename(path)])]
+    else:
+        walk = os.walk(path)
+    for root, _dirs, files in walk:
         for fn in sorted(files):
             if fn.endswith(".parquet"):
                 st = os.stat(os.path.join(root, fn))

@@ -191,8 +191,7 @@ def incremental_update(
         .join(base_mapping.select("url"), "url", "left_semi")
     )
 
-    dic = O.propagate_hierarchy(O.clean_dictionary(spark.read.parquet(dict_path)))
-    aliases = O.collect_aliases(O.linker_dictionary(dic))
+    dic, aliases = O.prepare_dictionary(spark.read.parquet(dict_path))
 
     ext = extract_pages(spark.read.parquet(new_pages_path), langs).cache()
     cands = link_mentions(detect_mentions(ext, aliases), dic).cache()

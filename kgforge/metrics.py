@@ -3,8 +3,8 @@
 
 The reference appends per-table (runid, name, sourceval, destval, diff)
 rows to i2pReport and sites mail the table in as acceptance evidence.
-Here: one metrics DataFrame per run with per-stage / per-predicate
-counts and distinct-subject counts, written next to the triple output.
+Here: one metrics DataFrame per run with per-predicate counts and
+distinct-subject counts, written next to the triple output.
 Exact counts gate the tests; at 10^12-doc scale the monitoring variant
 uses approx_count_distinct (documented at SURVEY.md §2.4).
 """
@@ -13,17 +13,8 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def stage_counts(df: DataFrame, stage: str, subj_col: str | None = None) -> DataFrame:
-    aggs = [F.lit(stage).alias("stage"), F.count(F.lit(1)).alias("n_rows")]
-    if subj_col:
-        aggs.append(F.countDistinct(subj_col).alias("n_subjects"))
-    else:
-        aggs.append(F.lit(None).cast("long").alias("n_subjects"))
-    return df.agg(*aggs)
 
 
 def triple_report(triples: DataFrame) -> DataFrame:
@@ -57,8 +48,3 @@ def write_metrics(
         .parquet(f"{out_dir}/{name}")
     )
 
-
-def read_metrics(
-    spark: SparkSession, out_dir: str, name: str = "_metrics"
-) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/{name}")

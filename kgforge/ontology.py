@@ -1,5 +1,5 @@
-"""Ontology / concept-dictionary module — load, clean, dedup, propagate,
-broadcast.
+"""Ontology / concept-dictionary module — clean, dedup, propagate,
+broadcast; `prepare_dictionary` is the front door every pipeline uses.
 
 This is the analog of the reference's ontology machinery:
 - cleanup (prefix strip, folder exclusion): ontology_fix_script_ms_v5.sql
@@ -134,6 +134,15 @@ def collect_aliases(dic: DataFrame, budget: int | None = None) -> list[str]:
     return [r["alias"] for r in probe]
 
 
+def prepare_dictionary(raw: DataFrame) -> tuple[DataFrame, list[str]]:
+    """A raw concept dictionary as the linker reads it: (the cleaned,
+    hierarchy-propagated rows, their sorted distinct leaf aliases — the
+    vocabulary detect_mentions matches). Sorted so the alias list, and
+    with it the mention UDF's closure, is the same on every run."""
+    dic = propagate_hierarchy(clean_dictionary(raw))
+    return dic, sorted(collect_aliases(linker_dictionary(dic)))
+
+
 def propagate_hierarchy(
     dic: DataFrame, max_depth: int = 20, force_distributed: bool = False
 ) -> DataFrame:
@@ -260,27 +269,3 @@ def _propagate_distributed(dic: DataFrame, max_depth: int = 20) -> DataFrame:
         .join(resolved, "concept_path", "left")
         .select(*DICT_COLS)
     )
-
-
-def split_scheme(dic: DataFrame) -> DataFrame:
-    """scheme:value split of canonical_id (SUBSTR/INSTR at
-    Oracle/PCORNetLoader_ora.sql:1474 and 10+ other sites)."""
-    return dic.withColumn(
-        "scheme", F.substring_index("canonical_id", ":", 1)
-    ).withColumn("code", F.substring_index("canonical_id", ":", -1))
-
-
-def domain_of(dic: DataFrame) -> DataFrame:
-    """Pre-materialize the path-prefix domain (the '\\PCORI\\DIAGNOSIS\\%'
-    LIKE family, Oracle/PCORNetLoader_ora.sql:1120 etc.) as a column so
-    downstream predicates constant-fold and prune instead of re-running
-    string matches."""
-    return dic.withColumn(
-        "domain", F.element_at(F.split(F.col("concept_path"), r"\\"), 3)
-    )
-
-
-def load_dictionary(spark: SparkSession, path: str) -> DataFrame:
-    """Load + full cleanup pipeline; result is broadcast at use sites."""
-    raw = spark.read.parquet(path)
-    return domain_of(dedup_by_preference(propagate_hierarchy(clean_dictionary(raw))))

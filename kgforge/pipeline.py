@@ -1,24 +1,34 @@
-"""End-to-end pipeline wiring + the driver-checkable kg_* queries.
+"""The kg stage chain, and the oracle-checked kg_* queries over it.
 
-Two consumers:
+The chain is declared once, in `STAGES`; `resolve` builds a stage after
+the stages it reads, only when something reads it, under one of two
+materialization policies:
 
-1. `run_pipeline` — the production path: pages parquet + concept_dict
-   parquet -> checkpointed stages -> partitioned triples + metrics.
-   Used by the CLI, the pytest goldens (synthetic fixture), and bench.
+1. persisted — `run_pipeline`, the production path (CLI, pytest goldens,
+   bench): pages + concept_dict parquet -> `CheckpointManager.run_stage`
+   per stage (parquet plus manifest) -> metrics. Each stage's fingerprint
+   derives from those of the inputs and stages it reads, so a changed
+   input recomputes exactly the stages downstream of it.
 
-2. `QUERIES`/`ORACLES` — the driver-checkable variant: pages derived
-   deterministically from the pre-generated `documents` table
-   (kgforge.sources.pages_from_documents) so every stage has an exact
-   DuckDB oracle. The Spark side runs the REAL engine (Arrow-UDF
-   extraction, broadcast linking, MinHash->LSH->CC canonicalization);
-   the oracle recomputes the *expected* result relationally — e.g. the
-   canonicalization oracle is exact-Jaccard + recursive-CTE transitive
-   closure, which the MinHash path must reproduce because candidates are
-   exact-verified before CC (recall loss probability ~5e-8 per pair at
-   the 0.8 threshold with 128 perms / 32 bands).
+2. session — `QUERIES`/`ORACLES`: pages derived deterministically from
+   the pre-generated `documents` table (sources.pages_from_documents), so
+   every stage has an exact DuckDB oracle; stages are `.cache()`d per
+   (session, sf_dir) in `_KG_STAGE_CACHE` until `reset_stages`. The Spark
+   side runs the REAL engine (Arrow-UDF extraction, broadcast linking,
+   MinHash->LSH->CC canonicalization); the oracle recomputes the
+   *expected* result relationally — e.g. the canonicalization oracle is
+   exact-Jaccard + recursive-CTE transitive closure, which the MinHash
+   path must reproduce because candidates are exact-verified before CC
+   (recall loss probability ~5e-8 per pair at the 0.8 threshold with 128
+   perms / 32 bands).
 """
 
 from __future__ import annotations
+
+import functools
+import hashlib
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +43,79 @@ from kgforge.mentions import detect_mentions
 from kgforge.link import attach_qualifiers, link_mentions
 from kgforge.metrics import triple_report, write_metrics
 from kgforge.sources import HTML_PREFIX, HTML_SUFFIX, pages_from_documents, read_table
+
+
+# ---------------------------------------------------------------------------
+# The stage chain
+# ---------------------------------------------------------------------------
+
+class Stage(NamedTuple):
+    reads: tuple[str, ...]  # stages whose frames the build reads
+    inputs: tuple[str, ...]  # run inputs the build reads
+    # {read stage or input name: value, "info": decision record} -> frame
+    build: Callable[[dict], DataFrame]
+
+
+def _emit(v: dict) -> DataFrame:
+    t = E.all_triples(
+        v["extracted"], v["candidates"], v["canon_mapping"], periods=v["periods"]
+    )
+    if v["triple_cols"]:
+        # project before the one distinct(), so its exchange carries
+        # only the kept columns
+        t = t.select(*v["triple_cols"])
+    # distinct() already hash-shuffles the full row set; the persisted
+    # policy writes the pred-partitioned layout straight from that
+    # exchange. A second repartitionByRange would add a sampling pass +
+    # one more full shuffle of the triple set for nothing locally (file
+    # count is bounded by tasks x |preds|, and |preds| is small); on a
+    # real deployment the sink's write.distribution-mode does this
+    # clustering inside the same write.
+    return t.distinct()
+
+
+STAGES: dict[str, Stage] = {
+    "extracted": Stage((), ("pages", "langs"),
+                       lambda v: extract_pages(v["pages"], v["langs"])),
+    "mentions": Stage(("extracted",), ("dictionary",),
+                      lambda v: detect_mentions(v["extracted"], v["dictionary"][1])),
+    "candidates": Stage(("mentions",), ("dictionary",),
+                        lambda v: link_mentions(v["mentions"], v["dictionary"][0])),
+    # `info` receives the CC branch decision (local vs distributed
+    # union-find, probed edge count, memory-derived threshold) — run
+    # evidence for the cutover policy, filled only when the stage
+    # actually computes
+    "canon_mapping": Stage(("extracted",), ("threshold",), lambda v: C.canonicalize(
+        v["extracted"], threshold=v["threshold"], info=v["info"])[0]),
+    "triples": Stage(("extracted", "candidates", "canon_mapping"),
+                     ("periods", "triple_cols"), _emit),
+}
+
+
+def resolve(name: str, inputs: dict[str, Callable], materialize: Callable,
+            done: dict, info: dict | None = None) -> DataFrame:
+    """Stage `name`, memoized in `done`: the stages it reads first, in
+    declaration order, then `materialize(name, build)`, which persists or
+    caches `build()`. `inputs` maps run-input names to zero-argument
+    callables, called only inside a build; `info` is every build's
+    decision record."""
+    if name not in done:
+        st = STAGES[name]
+        v = {r: resolve(r, inputs, materialize, done, info) for r in st.reads}
+        v["info"] = info
+        done[name] = materialize(
+            name, lambda: st.build(v | {k: inputs[k]() for k in st.inputs})
+        )
+    return done[name]
+
+
+def stage_fingerprint(name: str, input_fps: dict[str, str]) -> str:
+    """Hash over the fingerprints of the run inputs stage `name` reads and
+    of the stages it reads."""
+    st = STAGES[name]
+    parts = [f"{k}={input_fps[k]}" for k in st.inputs]
+    parts += [f"{r}={stage_fingerprint(r, input_fps)}" for r in st.reads]
+    return hashlib.sha256("|".join(parts).encode()).hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -55,65 +138,44 @@ def run_pipeline(
     period_end) overriding observed spans — the loyalty-cohort input
     (Oracle/PCORNetLoader_ora.sql:166-177); absent = observed-only."""
     cp = CheckpointManager(spark, out_dir, run_id)
-    # Every CLI-settable input participates in stage invalidation:
-    # re-running into the same --out with a different dictionary, lang
-    # filter, or threshold must NOT silently reuse stale stage outputs —
-    # that would break the 'identical triple set on resume' contract.
-    fp_pages = fingerprint_input(pages_path)
-    fp_dict = fingerprint_input(dict_path)
-    fp_periods = fingerprint_input(periods_path) if periods_path else "none"
-    fp_extract = f"{fp_pages}|langs={','.join(langs) if langs else '*'}"
-    fp_mentions = f"{fp_extract}|dict={fp_dict}"
-    fp_canon = f"{fp_extract}|thr={threshold}"
-    fp_triples = f"{fp_mentions}|thr={threshold}|periods={fp_periods}"
-
     # scan splits come from spark.sql.files.maxPartitionBytes (8MB in
     # kgforge.conf) — no repartition shuffle; the parquet scan itself
     # fans out to every core
-    pages = spark.read.parquet(pages_path)
-    extracted = cp.run_stage(
-        "extracted", lambda: extract_pages(pages, langs), fp_extract
-    )
-
-    dic = O.propagate_hierarchy(
-        O.clean_dictionary(spark.read.parquet(dict_path))
-    )
-    aliases = O.collect_aliases(O.linker_dictionary(dic))
-
-    mentions = cp.run_stage(
-        "mentions", lambda: detect_mentions(extracted, aliases), fp_mentions
-    )
-    candidates = cp.run_stage(
-        "candidates", lambda: link_mentions(mentions, dic), fp_mentions
-    )
-    # canon_info receives the CC branch decision (local vs distributed
-    # union-find, probed edge count, memory-derived threshold) — run
-    # evidence for the cutover policy. Populated only when the stage
-    # actually computes: on resume the decision belongs to the run that
-    # produced the checkpoint, so nothing is (re-)recorded.
+    inputs = {
+        "pages": lambda: spark.read.parquet(pages_path),
+        "langs": lambda: langs,
+        "dictionary": functools.cache(
+            lambda: O.prepare_dictionary(spark.read.parquet(dict_path))
+        ),
+        "threshold": lambda: threshold,
+        "periods": lambda: spark.read.parquet(periods_path) if periods_path else None,
+        "triple_cols": lambda: None,
+    }
+    # Every CLI-settable input participates in stage invalidation:
+    # re-running into the same --out with a different dictionary, lang
+    # filter, threshold or periods table must NOT silently reuse stale
+    # stage outputs — that would break the 'identical triple set on
+    # resume' contract.
+    fps = {
+        "pages": fingerprint_input(pages_path),
+        "langs": ",".join(langs) if langs else "*",
+        "dictionary": fingerprint_input(dict_path),
+        "threshold": str(threshold),
+        "periods": fingerprint_input(periods_path) if periods_path else "none",
+        "triple_cols": "*",
+    }
+    # on resume the CC decision belongs to the run that produced the
+    # checkpoint, so nothing is (re-)recorded
     canon_info: dict = {}
-    mapping = cp.run_stage(
-        "canon_mapping",
-        lambda: C.canonicalize(extracted, threshold=threshold, info=canon_info)[0],
-        fp_canon,
-    )
-    triples = cp.run_stage(
+    triples = resolve(
         "triples",
-        # distinct() already hash-shuffles the full row set; write the
-        # pred-partitioned layout straight from that exchange. A second
-        # repartitionByRange would add a sampling pass + one more full
-        # shuffle of the triple set for nothing locally (file count is
-        # bounded by tasks x |preds|, and |preds| is small); on a real
-        # deployment the sink's write.distribution-mode does this
-        # clustering inside the same write.
-        lambda: E.all_triples(
-            extracted,
-            candidates,
-            mapping,
-            periods=spark.read.parquet(periods_path) if periods_path else None,
-        ).distinct(),
-        fp_triples,
-        partition_by=["pred"],
+        inputs,
+        lambda name, build: cp.run_stage(
+            name, build, stage_fingerprint(name, fps),
+            partition_by=["pred"] if name == "triples" else None,
+        ),
+        {},
+        canon_info,
     )
     report = triple_report(triples)
     write_metrics(report, out_dir, run_id)
@@ -195,87 +257,90 @@ def inline_dictionary(spark: SparkSession) -> DataFrame:
     )
 
 
-_DICT_CACHE: dict[str, DataFrame] = {}
+# Session-materialized frames of the kg_* family, keyed per (session,
+# sf_dir): the five stages, the prepared dictionary, and the derived frames
+# several queries share (cooc, pos_triples, meas_candidates, lg_resolved).
+# Every registered query runs in ONE session; without sharing, each kg_*
+# query re-runs Arrow-UDF extraction (and kg_report re-executes all of
+# kg_triples). Values are frames, or dicts/tuples holding frames; keying by applicationId (unique per
+# session), not id(spark), keeps a new session from getting frames bound
+# to a dead one after CPython reuses the object id.
+_KG_STAGE_CACHE: dict[tuple[str, str], dict[str, object]] = {}
 
 
-def prepared_dictionary(spark: SparkSession) -> DataFrame:
-    """clean -> propagate on the dirty inline dictionary (the linker's
-    own window rank + regex filter handle dedup/disambiguation).
-    Memoized per session — the dictionary is static metadata. Keyed by
-    applicationId (unique per session), not id(spark): CPython reuses
-    object ids after GC, which could hand a new session a cached
-    DataFrame bound to a dead one."""
-    key = spark.sparkContext.applicationId
-    if key not in _DICT_CACHE:
-        _DICT_CACHE[key] = O.propagate_hierarchy(
-            O.clean_dictionary(inline_dictionary(spark))
-        ).cache()
-    return _DICT_CACHE[key]
+def _session_map(spark: SparkSession, sf_dir: str) -> dict:
+    return _KG_STAGE_CACHE.setdefault((spark.sparkContext.applicationId, sf_dir), {})
 
 
-def _linker_aliases(spark: SparkSession) -> list[str]:
-    return sorted(O.collect_aliases(O.linker_dictionary(prepared_dictionary(spark))))
+def _session(spark: SparkSession, sf_dir: str, name: str, build: Callable):
+    """`build()`, memoized as entry `name` of the session's map."""
+    st = _session_map(spark, sf_dir)
+    if name not in st:
+        st[name] = build()
+    return st[name]
 
 
-# Shared stage results for the kg_* family, keyed per (session, sf_dir).
-# The driver runs every registered query in ONE session; without sharing,
-# each kg_* query re-runs Arrow-UDF extraction (and kg_report re-executes
-# all of kg_triples) — redundancy that cost the flagship its CORRECTNESS
-# rows in round 1 when the driver's budget ran out. The cache holds five
-# small DataFrames per sf_dir; entries die with the session's
-# applicationId.
-_KG_STAGE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
+def reset_stages() -> None:
+    """Unpersist and forget every session frame: the next kg_* query
+    rebuilds its stages from the scan (bench passes start cold)."""
+    for st in _KG_STAGE_CACHE.values():
+        for v in st.values():
+            # a tuple is the dictionary entry; the frames inside the cooc
+            # dict are localCheckpoints, which unpersist does not release
+            for df in v if isinstance(v, tuple) else (v,):
+                if isinstance(df, DataFrame):
+                    df.unpersist()
+    _KG_STAGE_CACHE.clear()
 
 
-def _kg_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KG_STAGE_CACHE:
-        _KG_STAGE_CACHE[key] = {}
-    return _KG_STAGE_CACHE[key]
+def _dictionary(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[str]]:
+    """(dic, aliases) of the dirty inline dictionary — clean -> propagate
+    (the linker's own window rank + regex filter handle
+    dedup/disambiguation); the frame is cached, every dictionary-reading
+    query shares it."""
+
+    def build():
+        dic, aliases = O.prepare_dictionary(inline_dictionary(spark))
+        return dic.cache(), aliases
+
+    return _session(spark, sf_dir, "dictionary", build)
 
 
-def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    st = _kg_stages(spark, sf_dir)
-    if "extracted" not in st:
+def _session_inputs(spark: SparkSession, sf_dir: str) -> dict[str, Callable]:
+    return {
         # hash-repartition before the Arrow extraction UDF: the local
         # documents fixture is 1-2 parquet splits, which would run the
         # extraction AND every cached downstream Python stage (mention
         # detection rides this frame) on 2 of 32 cores (r06: measured
         # 9.3s -> 2.4s for the mention stage at sf1.0). A 100-TB table
         # arrives as thousands of splits and skips this.
-        pages = pages_from_documents(spark, sf_dir).repartition(
+        "pages": lambda: pages_from_documents(spark, sf_dir).repartition(
             spark.sparkContext.defaultParallelism, "url"
-        )
-        st["extracted"] = extract_pages(pages, langs=("en",)).cache()
-    return st["extracted"]
+        ),
+        "langs": lambda: ("en",),
+        "dictionary": lambda: _dictionary(spark, sf_dir),
+        "threshold": lambda: NEAR_DUP_THRESHOLD,
+        "periods": lambda: None,
+        "triple_cols": lambda: ("subj", "pred", "obj", "src_url"),
+    }
 
 
-def _mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    st = _kg_stages(spark, sf_dir)
-    if "mentions" not in st:
-        st["mentions"] = detect_mentions(
-            _extracted(spark, sf_dir), _linker_aliases(spark)
-        ).cache()
-    return st["mentions"]
+def _stage(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Stage `name` under the session policy: built on first read and
+    `.cache()`d into the session's map."""
+    return resolve(
+        name,
+        _session_inputs(spark, sf_dir),
+        lambda _name, build: build().cache(),
+        _session_map(spark, sf_dir),
+    )
 
 
-def _candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    st = _kg_stages(spark, sf_dir)
-    if "candidates" not in st:
-        st["candidates"] = link_mentions(
-            _mentions(spark, sf_dir), prepared_dictionary(spark)
-        ).cache()
-    return st["candidates"]
-
-
-def _mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    st = _kg_stages(spark, sf_dir)
-    if "mapping" not in st:
-        mapping, _metrics = C.canonicalize(
-            _extracted(spark, sf_dir), threshold=NEAR_DUP_THRESHOLD
-        )
-        st["mapping"] = mapping.cache()
-    return st["mapping"]
+_extracted = functools.partial(_stage, name="extracted")
+_mentions = functools.partial(_stage, name="mentions")
+_candidates = functools.partial(_stage, name="candidates")
+_mapping = functools.partial(_stage, name="canon_mapping")
+_triples = functools.partial(_stage, name="triples")
 
 
 def _cooc_base(spark: SparkSession, sf_dir: str) -> dict:
@@ -290,8 +355,7 @@ def _cooc_base(spark: SparkSession, sf_dir: str) -> dict:
     RDD instead of re-deriving the join."""
     from kgforge.operators import graph as G
 
-    st = _kg_stages(spark, sf_dir)
-    if "cooc" not in st:
+    def build() -> dict:
         c = _candidates(spark, sf_dir)
         pe = c.filter(F.col("kind") == "entity").select(
             "url", F.col("canonical_id").alias("entity")
@@ -302,13 +366,9 @@ def _cooc_base(spark: SparkSession, sf_dir: str) -> dict:
         edges = G.edges_from_support(
             pairs, cnt, COOC_MIN_JACCARD
         ).localCheckpoint(eager=True)
-        st["cooc"] = {
-            "eligible": eligible,
-            "pairs": pairs,
-            "cnt": cnt,
-            "edges": edges,
-        }
-    return st["cooc"]
+        return {"eligible": eligible, "pairs": pairs, "cnt": cnt, "edges": edges}
+
+    return _session(spark, sf_dir, "cooc", build)
 
 
 def _pos_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -317,35 +377,18 @@ def _pos_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone reads it from three plan branches (vocab, split hashing, the
     collision join), so without materialization the candidates-mapping
     join + distinct re-ran up to four times per pass."""
-    st = _kg_stages(spark, sf_dir)
-    if "pos_triples" not in st:
-        c = _candidates(spark, sf_dir)
-        m = _mapping(spark, sf_dir)
-        st["pos_triples"] = (
-            c.join(m, "url")
-            .select(
-                F.col("canon_url").alias("subj"),
-                "pred",
-                F.col("canonical_id").alias("obj"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
+    return _session(
+        spark, sf_dir, "pos_triples",
+        lambda: _candidates(spark, sf_dir)
+        .join(_mapping(spark, sf_dir), "url")
+        .select(
+            F.col("canon_url").alias("subj"),
+            "pred",
+            F.col("canonical_id").alias("obj"),
         )
-    return st["pos_triples"]
-
-
-def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    st = _kg_stages(spark, sf_dir)
-    if "triples" not in st:
-        t = E.all_triples(
-            _extracted(spark, sf_dir),
-            _candidates(spark, sf_dir),
-            _mapping(spark, sf_dir),
-        )
-        st["triples"] = (
-            t.select("subj", "pred", "obj", "src_url").distinct().cache()
-        )
-    return st["triples"]
+        .distinct()
+        .localCheckpoint(eager=True),
+    )
 
 
 def kg_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,17 +488,18 @@ def pages_with_measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _measure_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared extract->detect->link over the measurement-bearing pages."""
-    st = _kg_stages(spark, sf_dir)
-    if "meas_candidates" not in st:
-        # same scan fan-out as _extracted (the measurement pages are the
-        # same 1-2 split local fixture)
+
+    def build() -> DataFrame:
+        # same scan fan-out as the session pages (the measurement pages
+        # are the same 1-2 split local fixture)
         pages = pages_with_measurements(spark, sf_dir).repartition(
             spark.sparkContext.defaultParallelism, "url"
         )
-        ext = extract_pages(pages, langs=("en",))
-        m = detect_mentions(ext, _linker_aliases(spark))
-        st["meas_candidates"] = link_mentions(m, prepared_dictionary(spark)).cache()
-    return st["meas_candidates"]
+        dic, aliases = _dictionary(spark, sf_dir)
+        m = detect_mentions(extract_pages(pages, langs=("en",)), aliases)
+        return link_mentions(m, dic).cache()
+
+    return _session(spark, sf_dir, "meas_candidates", build)
 
 
 def kg_measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,7 +862,7 @@ def kg_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url", F.posexplode(F.split("text", " ")).alias("i", "w")
     )
     win = (
-        winner_dictionary(prepared_dictionary(spark))
+        winner_dictionary(_dictionary(spark, sf_dir)[0])
         .filter(~F.col("surface").contains(" "))  # positional = single-token
         .select("surface", "canonical_id")
     )
@@ -1311,12 +1355,12 @@ def _lg_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.9s vs 2.6s at sf1.0)."""
     from kgforge.operators import graph as G
 
-    st = _kg_stages(spark, sf_dir)
-    if "lg_resolved" not in st:
-        st["lg_resolved"] = G.resolve_links(
+    return _session(
+        spark, sf_dir, "lg_resolved",
+        lambda: G.resolve_links(
             G.extract_hyperlinks(pages_with_links(spark, sf_dir))
-        ).localCheckpoint(eager=True)
-    return st["lg_resolved"]
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _lg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1350,7 +1394,7 @@ def _lg_aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
     linker join — nothing new shuffles."""
     from kgforge.link import winner_dictionary
 
-    win = winner_dictionary(prepared_dictionary(spark)).select(
+    win = winner_dictionary(_dictionary(spark, sf_dir)[0]).select(
         "surface", "canonical_id"
     )
     return (
@@ -1502,7 +1546,7 @@ def kg_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_with_links(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "url"
     )
-    mudf = make_mention_udf(_linker_aliases(spark))
+    mudf = make_mention_udf(_dictionary(spark, sf_dir)[1])
 
     html = F.decode(F.col("html"), "UTF-8")
     links = F.arrays_zip(
@@ -1882,7 +1926,7 @@ def kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
     )
     win = F.broadcast(
-        winner_dictionary(prepared_dictionary(spark))
+        winner_dictionary(_dictionary(spark, sf_dir)[0])
         .filter(~F.col("surface").contains(" "))
         .select("surface", "canonical_id", "pred")
     )
@@ -1965,7 +2009,7 @@ def kg_dictdiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever shuffle."""
     from kgforge.link import winner_dictionary
 
-    v1 = winner_dictionary(prepared_dictionary(spark)).select(
+    v1 = winner_dictionary(_dictionary(spark, sf_dir)[0]).select(
         "surface", F.col("canonical_id").alias("old_id")
     )
     v2 = (
@@ -2137,7 +2181,7 @@ def kg_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kgforge.link import winner_dictionary
 
-    dict_w = winner_dictionary(prepared_dictionary(spark)).select(
+    dict_w = winner_dictionary(_dictionary(spark, sf_dir)[0]).select(
         "pred",
         F.substring_index("canonical_id", ":", 1).alias("scheme"),
         "canonical_id",

@@ -268,8 +268,7 @@ def run_stream_kg_parity(
     from kgforge.mentions import detect_mentions
     from kgforge.sources import PAGES_SCHEMA
 
-    dic = O.propagate_hierarchy(O.clean_dictionary(dict_df))
-    aliases = sorted(O.collect_aliases(O.linker_dictionary(dic)))
+    dic, aliases = O.prepare_dictionary(dict_df)
 
     def stages(pages: DataFrame) -> DataFrame:
         cand = link_mentions(

@@ -203,7 +203,10 @@ def test_periods_override_end_to_end_and_invalidation(
     hasSpan triple carries the curated interval (basis 'A'), others stay
     observed ('E'); and changing --periods invalidates ONLY the triples
     stage on re-run into the same --out (the fingerprint contract for
-    the new CLI input)."""
+    the new CLI input). Stage fingerprints derive from the inputs and
+    stages each stage reads, so a new dictionary then recomputes only
+    mentions, candidates and triples, and a new threshold only
+    canon_mapping and triples."""
     from pyspark.sql import functions as F
 
     out = str(tmp_path_factory.mktemp("kgf_periods"))
@@ -265,6 +268,46 @@ def test_periods_override_end_to_end_and_invalidation(
             (F.col("pred") == "hasSpan") & (F.col("subj") == subj)
         ).first()
         assert new["obj"].startswith("2025-01-01T00:00:00Z/")
+
+    # one more input changed per re-run
+    dict2 = str(tmp_path_factory.mktemp("dict2") / "concept_dict.parquet")
+    pd.read_parquet(f"{fixture_dir}/concept_dict.parquet").iloc[:-1].to_parquet(
+        dict2, index=False
+    )
+    for change, recomputed in [
+        ({}, {"mentions", "candidates", "triples"}),
+        ({"threshold": 0.85}, {"canon_mapping", "triples"}),
+    ]:
+        info = run_pipeline(
+            spark,
+            pages_path=f"{fixture_dir}/pages.parquet",
+            dict_path=dict2,
+            out_dir=out,
+            periods_path=p2,
+            **change,
+        )
+        assert {s["stage"] for s in info["stages"] if not s["skipped"]} == recomputed
+
+
+def test_session_stages_are_lazy_and_reset(spark, sf001):
+    """The kg_* queries build only the stages they read: kg_extract
+    leaves `extracted` alone in the session's map — no dictionary, no
+    canonicalization, whose eager CC probe would charge canon jobs to
+    kg_extract; kg_triples fills in what it reads; reset_stages empties
+    the map."""
+    from kgforge import pipeline as P
+
+    P.reset_stages()
+    P.kg_extract(spark, sf001).collect()
+    key = (spark.sparkContext.applicationId, sf001)
+    assert list(P._KG_STAGE_CACHE) == [key]
+    assert set(P._KG_STAGE_CACHE[key]) == {"extracted"}
+    P.kg_triples(spark, sf001)
+    assert set(P._KG_STAGE_CACHE[key]) == {
+        "extracted", "dictionary", "mentions", "candidates", "canon_mapping", "triples"
+    }
+    P.reset_stages()
+    assert P._KG_STAGE_CACHE == {}
 
 
 def test_kg_diff_changeset_semantics(spark, sf001):
@@ -380,11 +423,8 @@ def test_kg_fused_matches_separate_paths(spark, sf001):
     quality rule (gates/kept)."""
     from kgforge.operators import graph as G
     from kgforge.mentions import detect_mentions
-    from kgforge.pipeline import (
-        _linker_aliases,
-        kg_fused,
-        pages_with_links,
-    )
+    from kgforge.ontology import prepare_dictionary
+    from kgforge.pipeline import inline_dictionary, kg_fused, pages_with_links
     from kgforge.extract import extract_text_udf
 
     fused = {
@@ -400,7 +440,7 @@ def test_kg_fused_matches_separate_paths(spark, sf001):
     )
     sep_m = {
         ("mentions", r["surface"]): r["n"]
-        for r in detect_mentions(ext, _linker_aliases(spark))
+        for r in detect_mentions(ext, prepare_dictionary(inline_dictionary(spark))[1])
         .filter(F.col("kind") == "entity")
         .groupBy("surface")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -80,21 +80,9 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs, oracles = dict(se.queries()), dict(se.oracle_sql())
-    if all_rel:
-        # also sweeps the tx_* standalones folded into tx_stats and the
-        # kg_harvest/kg_dictstats/kg_report standalones folded into
-        # kg_meta (same rationale as the relational compounds: the
-        # bundles are what the driver records, the standalones stay
-        # verifiable here)
-        from kgforge import pipeline
-        from kgforge.operators import dedup, relational, similarity, textstats
-
-        for mod in (relational, textstats, dedup, similarity, pipeline):
-            for name, fn in mod.QUERIES.items():
-                qs.setdefault(name, fn)
-            for name, sql in mod.ORACLES.items():
-                oracles.setdefault(name, sql)
+    # --all-rel also sweeps the standalones folded into compound bundles
+    # (relational compounds, tx_stats, kg_meta), so each stays verifiable
+    qs, oracles = se.all_queries() if all_rel else (se.queries(), se.oracle_sql())
     n_pass = n_fail = n_skip = 0
     for name, fn in qs.items():
         if prefixes and not any(name.startswith(p) for p in prefixes):
